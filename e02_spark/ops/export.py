@@ -430,12 +430,6 @@ def _replay_log(dest: str) -> dict:
     return out
 
 
-def _read_log_state(dest: str) -> tuple[int | None, dict, int | None]:
-    """Exporter's view of _replay_log (kept for the export path)."""
-    s = _replay_log(dest)
-    return s["last_v"], s["live"], s["src_version"]
-
-
 def _entry_stats_json(entry: dict) -> str:
     """Delta per-file `stats`: numRecords from the manifest entry, min/
     max from its harvested bounds (already JSON-safe, isoformat strings

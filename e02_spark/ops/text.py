@@ -1,7 +1,10 @@
 """Text-analysis operators over the documents table.
 
-All built from JVM-side primitives (split/explode/md5/groupBy) — no Python
-UDFs in any hot path. Hash functions are md5-hex (identical output in Spark
+Built from JVM-side primitives (split/explode/md5/groupBy), except the
+word n-gram operators — `shingles`, `ngram_occurrences` and
+`repetition_metrics` — which each work row-locally in one Python
+`mapInArrow` crossing (see _grams_arrow); their pure-JVM forms stay as the
+pinned `*_jvm` twins. Hash functions are md5-hex (identical output in Spark
 and DuckDB), so every fingerprint/minhash/simhash is oracle-checkable.
 
 Scale notes: token/shingle explosion is linear in corpus size and shuffles

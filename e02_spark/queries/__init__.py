@@ -50,12 +50,6 @@ def legacy_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return dict(composites._ALL_Q)
 
 
-def legacy_oracles() -> dict[str, str]:
-    from . import composites
-
-    return dict(composites._ALL_O)
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from . import composites
 

@@ -600,19 +600,23 @@ PART_TIMINGS: dict[str, float] = {}
 
 # Streaming composites run their parts' WHOLE jobs eagerly inside the
 # part callable, so sequential part order pays sum-of-walls. These groups
-# run concurrently (threads; Spark schedules concurrent jobs in one
-# session) — groups execute in order, members of a group together. Only
-# parts with the SAME scoped shuffle width may share a group (the
-# refcounted scoped_shuffle_partitions enforces it). Results are
-# value-identical to sequential execution — every job writes its own
-# uniquely-named sink/state and the engine's determinism rules are
-# parallelism-independent; the driver's hash check pins it every round.
+# run concurrently (overlap legs; Spark schedules concurrent jobs on one
+# SparkContext) — groups execute in order, members of a group together.
+# Every member runs on its OWN cloned session (spark.newSession(): shared
+# SparkContext, executors and cache, but an ISOLATED SQLConf) — the
+# per-query isolation a multi-tenant Spark deployment gets from separate
+# sessions — so a member's shuffle width (CLONE_SHUFFLE, or a
+# scoped_shuffle_partitions inside the part) can never leak into a
+# groupmate's, nor into a streaming query a groupmate starts meanwhile.
+# Results are value-identical to sequential execution — every job writes
+# its own uniquely-named sink/state and the engine's determinism rules
+# are parallelism-independent; the oracle hash check pins it.
 PARALLEL_GROUPS: dict[str, list[set[str]]] = {
     "q95_stateful_stream": [{"q95", "q97", "q102", "q96"}],
     # ONE group: the wall is the longest single part, not a sum of two
     # phase walls. The streamers (q86/q87/q88/q114) scope the shuffle to
-    # 8; q120/q121/q122 run on a CLONE_SESSION at the session-default
-    # width. Round 10 moved the merge-chain family (q116-q119/q123/q124)
+    # 8 around their streams; q120/q121/q122 run at CLONE_SHUFFLE width.
+    # Round 10 moved the merge-chain family (q116-q119/q123/q124)
     # into its own entry so no basket exceeds 7 parts and a part
     # regression can't hide under a 13-part wall.
     "q86_streaming_parity": [
@@ -644,24 +648,9 @@ PARALLEL_GROUPS: dict[str, list[set[str]]] = {
     ],
 }
 
-# Parts that want a DIFFERENT shuffle width than their group run on a
-# cloned SparkSession (spark.newSession(): shared SparkContext and
-# executors, but an ISOLATED SQLConf) — the per-query shuffle-width
-# isolation a multi-tenant Spark deployment gets from separate sessions.
-# q96's sliding expansion is 4x the event count and wants the full
-# session-default width while its groupmates scope down to 8; q97's
-# per-user session state is likewise real parallel work that wants the
-# session default — without the clone, the width its streaming query
-# captured at .start() depended on whether q95/q102's scoped-to-8 window
-# was active at that instant (timing-dependent, usually 8). The clone
-# inherits NOTHING runtime-set, so tune_session() is re-applied (UTC
-# timezone is correctness-critical for q96's date_format output).
-CLONE_SESSION: set[str] = {
-    "q96", "q97", "q116", "q117", "q118", "q119", "q120", "q121", "q122",
-    "q123", "q124",
-}
-
-# Cloned sessions additionally sized to their data: the merge-chain
+# Member sessions sized to their data (the rest keep tune_session's
+# core-count width — q96's sliding expansion and q97's per-user session
+# state are real parallel work that wants it): the merge-chain
 # family shuffles ~10^5 rows per exchange, where the session-default 32
 # partitions is pure task overhead (the six parts race ~dozens of tiny
 # jobs on one scheduler). 8 matches the streaming entries'
@@ -669,8 +658,7 @@ CLONE_SESSION: set[str] = {
 # from explicit repartition(n_files), never the shuffle conf — and the
 # driver's hash check pins that every round. Round 13 added q120-q122:
 # each runs ~a dozen tiny commits/merges whose 32-way exchanges were
-# pure task overhead inside the q86 group wall (q122 already set 8 for
-# itself; the entry here just moves it before first use).
+# pure task overhead inside the q86 group wall.
 CLONE_SHUFFLE: dict[str, int] = {
     "q116": 8, "q117": 8, "q118": 8, "q119": 8, "q123": 8, "q124": 8,
     "q120": 8, "q121": 8, "q122": 8,
@@ -691,33 +679,40 @@ def _make_query(name, parts):
     def run_part(spark, sf_dir, tag, qname):
         import time
 
-        if tag in CLONE_SESSION:
-            from e02_spark.session import tune_session
-
-            spark = tune_session(spark.newSession())
-            w = CLONE_SHUFFLE.get(tag)
-            if w is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", str(w))
         t0 = time.time()
         df = _ALL_Q[qname](spark, sf_dir)
         PART_TIMINGS[f"{name}/{qname}"] = round(time.time() - t0, 3)
         return df
 
+    def run_member(spark, sf_dir, tag, qname):
+        # the clone inherits NOTHING runtime-set, so tune_session() is
+        # re-applied (UTC timezone is correctness-critical, e.g. for
+        # q96's date_format output)
+        from e02_spark.session import tune_session
+
+        own = tune_session(spark.newSession())
+        w = CLONE_SHUFFLE.get(tag)
+        if w is not None:
+            own.conf.set("spark.sql.shuffle.partitions", str(w))
+        return run_part(own, sf_dir, tag, qname)
+
     def run(spark, sf_dir: str) -> DataFrame:
         groups = PARALLEL_GROUPS.get(name)
         results: dict[str, DataFrame] = {}
         if groups:
-            from concurrent.futures import ThreadPoolExecutor
+            from functools import partial
+
+            from e02_spark.overlap import overlap
 
             for group in groups:
-                members = [p for p in parts if p[0] in group]
-                with ThreadPoolExecutor(max_workers=len(members)) as ex:
-                    futs = {
-                        tag: ex.submit(run_part, spark, sf_dir, tag, qname)
-                        for tag, qname, _ in members
-                    }
-                    for tag, fut in futs.items():
-                        results[tag] = fut.result()
+                members = [(tag, q) for tag, q, _ in parts if tag in group]
+                with overlap(*(
+                    partial(run_member, spark, sf_dir, tag, qname)
+                    for tag, qname in members
+                )) as legs:
+                    pass
+                for (tag, _), leg in zip(members, legs):
+                    results[tag] = leg.result()
         else:
             for tag, qname, cols in parts:
                 results[tag] = run_part(spark, sf_dir, tag, qname)

@@ -34,11 +34,13 @@ import os
 import shutil
 import tempfile
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import normalize_ts
+from ..overlap import overlap
 from ..streaming.jobs import (
     incremental_event_counts,
     review_gate_stream,
@@ -81,7 +83,7 @@ from contextlib import contextmanager
 @contextmanager
 def _stream_shuffle(spark: SparkSession, n: int = 8):
     """Scope spark.sql.shuffle.partitions down for a streaming run
-    (delegates to session.scoped_shuffle_partitions — one implementation).
+    (session.scoped_shuffle_partitions on this part's own session).
 
     Stateful streaming cost scales with the number of state-store
     instances = shuffle partitions per stateful operator, paid per
@@ -239,34 +241,6 @@ FROM events GROUP BY 1, 2
 # Reference semantics: pr-review-flow.yml:242-288.
 # --------------------------------------------------------------------------
 
-import time as _time
-
-
-class _ProfT:
-    """Env-gated phase profiler (E02_PROF=1): prints leg walls to stderr."""
-
-    def __init__(self, name: str):
-        self.name = name
-        self.on = os.environ.get("E02_PROF") == "1"
-        self.t0 = _time.perf_counter()
-        self.marks: list[tuple[str, float]] = []
-
-    def mark(self, leg: str) -> None:
-        if self.on:
-            self.marks.append((leg, _time.perf_counter()))
-
-    def dump(self) -> None:
-        if self.on:
-            import sys as _sys
-
-            prev = self.t0
-            out = []
-            for n, t in self.marks:
-                out.append(f"{n}={t - prev:.2f}")
-                prev = t
-            print(f"PROF {self.name}: " + " ".join(out), file=_sys.stderr)
-
-
 _REVIEWS_DIR_MEMO: dict[str, str] = {}
 
 
@@ -408,9 +382,9 @@ GROUP BY ws, event_type
 # --------------------------------------------------------------------------
 def q97_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Like q96: per-user session state over the full event stream is real
-    # parallel work — q97 is in composites.CLONE_SESSION, so it runs on a
-    # fresh newSession() whose tune_session width applies (full cpu-count
-    # shuffle partitions), unscoped by its groupmates' _stream_shuffle(8).
+    # parallel work — so no _stream_shuffle: inside its composite it runs
+    # on its own cloned session at tune_session's width (full cpu-count
+    # shuffle partitions), whatever width its groupmates scope to.
     events_dir = _stage_events_dir(sf_dir, copies=1)
     name = f"q97_sink_{uuid.uuid4().hex[:12]}"
     stream = _events_stream(spark, events_dir, files_per_trigger=4)
@@ -597,7 +571,6 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_write,
     )
 
-    _pt = _ProfT("q114")
     orders = load_table(spark, sf_dir, "orders")
     table = os.path.join(_tracked_mkdtemp(prefix="e02_snaptbl_"), "tbl")
     snapshot_write(
@@ -613,7 +586,6 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         # filters, so the whole lifecycle runs bloom-bearing
         bloom_cols=["o_orderkey"],
     )
-    _pt.mark("base_write")
     # BLOOM point-probe leg, on the %4==0 base while it is SPARSE by
     # construction: a key ≡1 (mod 4) sits inside every file's [min,max]
     # span but provably absent — only the bloom can prune it; a present
@@ -662,33 +634,27 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_member = snapshot_read(spark, table).where(
         F.col("o_orderkey").isin(gaps)
     )
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=4) as _ex:
-        fut_pruned = (
-            _ex.submit(probe_pruned.count) if probe_pruned is not None
-            else None
-        )
-        fut_member = _ex.submit(probe_member.count)
-        fut_npub = _ex.submit(pub_slice.count)
+    with overlap(
+        probe_pruned.count if probe_pruned is not None else lambda: None,
+        probe_member.count,
+        pub_slice.count,
         # the meta_rows_match comparison far below needs COUNT(*) of the
-        # immutable source parquet — same pool, same overlap
-        fut_total = _ex.submit(orders.count)
-        fut_stg = _ex.submit(
+        # immutable source parquet — same overlap
+        orders.count,
+        partial(
             snapshot_write, pub_slice, stg, mode="overwrite", n_files=2,
             cluster_by=["o_orderkey"], stats_cols=["o_orderkey"],
+        ),
+    ) as legs:
+        n_pruned, n_member, n_pub, n_orders_total, _ = (
+            f.result() for f in legs
         )
-        n_pub = fut_npub.result()
-        n_orders_total = fut_total.result()
-        fut_stg.result()
-        bloom_probe_ok = (
-            len(proven) >= 1
-            and len(kept_hit) == 1
-            and fut_pruned is not None
-            and fut_pruned.result() == 0
-            and fut_member.result() == 0
-        )
-    _pt.mark("bloom_probe+stage")
+    bloom_probe_ok = (
+        len(proven) >= 1
+        and len(kept_hit) == 1
+        and n_pruned == 0
+        and n_member == 0
+    )
     # WRITE-AUDIT-PUBLISH leg: the %4==2 quarter lands in its own
     # staging snapshot table and is adopted by one zero-copy publish
     # commit (hard-linked files, staged stats reused); a keyed replay
@@ -706,7 +672,6 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         and pub_replay["files_adopted"] == 0
         and pub_replay["version"] == pub["version"]
     )
-    _pt.mark("publish")
     # BRANCH leg (round 11, writable refs): a NET-IDENTITY mutation
     # rides a branch — MoR-delete a slice, re-append the identical rows,
     # audit on the branch, FAST-FORWARD main as one atomic commit, fold.
@@ -755,11 +720,8 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         and snapshot_rows(table) == rows_at_branch
     )
     snapshot_branch_drop(table, "wip")
-    _pt.mark("branch_leg")
     snapshot_rewrite_deletes(spark, table)  # fold the adopted DV files
-    _pt.mark("rewrite_deletes")
     feed = _stage_orders_feed(spark, sf_dir)
-    _pt.mark("stage_feed")
 
     def run_stream() -> None:
         ckpt = _tracked_mkdtemp(prefix="e02_snapckpt_")
@@ -776,16 +738,13 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             _await(q)
 
     run_stream()
-    _pt.mark("stream1")
     rows_v1, ver_v1 = snapshot_rows(table), snapshot_versions(table)[-1]
     run_stream()  # fresh checkpoint -> batches 0..1 replay -> all no-ops
-    _pt.mark("stream2")
     replay_noop = (
         snapshot_rows(table) == rows_v1
         and snapshot_versions(table)[-1] == ver_v1
     )
     meta_rows_match = snapshot_rows(table) == n_orders_total
-    _pt.mark("orders_count")
     # O(metadata) rollback + DESCRIBE-HISTORY provenance, then roll
     # forward again: content at every step answered from manifests alone
     snapshot_rollback(table, ver_v1 - 1)
@@ -826,7 +785,6 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row-checked, then dropped so the GC leg stays exact.
     from ..ops.snapshot import snapshot_drop_tag, snapshot_tag
 
-    _pt.mark("rollback+asof")
     snapshot_tag(table, "audit-cut", ver_v1 - 1)
     tag_ok = (
         snapshot_read(spark, table, tag="audit-cut").count()
@@ -838,7 +796,6 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the now-unreferenced pre-compact data files; the final
     # hash-checked aggregate below reads the POST-GC table, so the
     # content pin proves GC deleted nothing live.
-    _pt.mark("tag")
     n_before = len(snapshot_versions(table))
     # GC-respect leg: a live branch pins its branch point against the
     # aggressive expire below (the ref-retention rule for writable
@@ -865,7 +822,6 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         and len(snapshot_versions(table)) == 1
         and snapshot_rows(table) == rows_v1
     )
-    _pt.mark("compact+expire")
     # METADATA-TABLE leg (round 11), on the post-GC table: the
     # queryable metadata tables must agree exactly with the manifest
     # they derive from, and the blooms declared on commit 1 must still
@@ -900,7 +856,7 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # disk, so the remaining verification legs are all independent reads:
     # the two metadata-table collects, the Spark digest aggregate, the
     # DuckDB third-party replay+digest, and the import round-trip (which
-    # reads only `dest`). Their fixed latencies overlap in one pool
+    # reads only `dest`). Their fixed latencies overlap as five legs
     # (guide §2.6) instead of running as five sequential tail jobs.
     def _duck_leg():
         live: dict = {}
@@ -953,24 +909,17 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ops.snapshot import snapshot_rows as _srows
 
     back = os.path.join(_tracked_mkdtemp(prefix="e02_deltain_"), "back")
-    with _TPE(max_workers=5) as _ex2:
-        fut_fm = _ex2.submit(
-            lambda: snapshot_meta(spark, table, "files").collect()
-        )
-        fut_hm = _ex2.submit(
-            lambda: snapshot_meta(spark, table, "history").collect()
-        )
-        fut_duck = _ex2.submit(_duck_leg)
-        fut_sp = _ex2.submit(_spark_digest_leg)
-        fut_imp = _ex2.submit(
+    with overlap(
+        lambda: snapshot_meta(spark, table, "files").collect(),
+        lambda: snapshot_meta(spark, table, "history").collect(),
+        _duck_leg,
+        _spark_digest_leg,
+        partial(
             snapshot_import_delta, spark, dest, back,
             stats_cols=["o_orderkey"],
-        )
-        fm = fut_fm.result()
-        hm = fut_hm.result()
-        duck = fut_duck.result()
-        sp = fut_sp.result()
-        imp_r = fut_imp.result()
+        ),
+    ) as legs:
+        fm, hm, duck, sp, imp_r = (f.result() for f in legs)
     bloom_meta_ok = (
         bloom_probe_ok
         and all(
@@ -993,8 +942,6 @@ def q114_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         and imp_r["files_adopted"] == 4
         and _srows(back) == rows_v1
     )
-    _pt.mark("meta+export_verify")
-    _pt.dump()
     # stats-pruned read: manifest [min,max] drops upper-half files before
     # Spark ever lists them; values prove the prune kept every needed row
     mid = _orders_max_key(spark, sf_dir) // 2
@@ -1205,6 +1152,10 @@ def _small_chain_start(spark: SparkSession, sf_dir: str) -> dict:
         if hit is not None:
             return hit
         table = _cloned_small_base(spark, sf_dir, "e02_smallchain_")
+        # The engine's one pool outside overlap(): this future is SHARED
+        # across composite parts through _SMALL_START and outlives the
+        # caller's frame, so no with-block can own its join. q119 joins
+        # it through the handle and q124 through _small_chain().
         from concurrent.futures import ThreadPoolExecutor
 
         ex = ThreadPoolExecutor(max_workers=1)
@@ -1221,8 +1172,6 @@ def _small_chain_merges(
     from ..io import load_table
     from ..ops.snapshot import snapshot_merge
 
-    _pt = _ProfT("small_chain")
-
     orders = load_table(spark, sf_dir, "orders").where(
         F.expr(_SMALL_WHERE.removeprefix("WHERE "))
     )
@@ -1234,7 +1183,6 @@ def _small_chain_merges(
         spark, table, dels, on=["o_orderkey"],
         when_matched="delete", insert_not_matched=False,
     )
-    _pt.mark("m1_delete")
     upd = orders.where(
         (F.col("o_orderkey") % 7 == 0)
         & (F.col("o_orderkey") >= q)
@@ -1250,8 +1198,6 @@ def _small_chain_merges(
         when_matched="update", insert_not_matched=True,
         n_files_new=2, cluster_by=["o_orderkey"],
     )
-    _pt.mark("m2_upsert")
-    _pt.dump()
     hit = {
         "table": table, "v1": 1, "v2": m1["version"],
         "v3": m2["version"], "m1": m1, "m2": m2,
@@ -1531,25 +1477,16 @@ def q120_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interaction with anything the CHECK leg commits to `table`) — run
     # CONCURRENTLY instead of as three serial fixed job latencies
     # (guide §2.6). Commit order on `table` itself is unchanged.
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
     cust_tbl = os.path.join(_tracked_mkdtemp(prefix="e02_spjcust_"), "tbl")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    pool = _TPE(max_workers=3)
-    # failures anywhere in this span must JOIN all three legs
-    # (ADVICE r14): an exception between the submits and the last
-    # .result() otherwise leaves an in-flight snapshot_write thread
-    # orphaned and its error unobserved
-    try:
-        fut_n_orders = pool.submit(orders.count)
-        fut_p0 = pool.submit(
-            orders.select("o_custkey", "o_orderkey", "o_orderpriority").first
-        )
-        fut_cust = pool.submit(
+    with overlap(
+        orders.count,
+        orders.select("o_custkey", "o_orderkey", "o_orderpriority").first,
+        partial(
             snapshot_write, cust, cust_tbl, mode="overwrite", n_files=4,
             partition_spec=[("bucket", "c_custkey", 16)],
-        )
-        pool.shutdown(wait=False)
+        ),
+    ) as (fut_n_orders, fut_p0, _):
         n_orders_total = fut_n_orders.result()
         schema_stable = (
             snapshot_read(spark, table, version=v1).columns
@@ -1570,11 +1507,9 @@ def q120_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         full = cur.where(F.col("o_custkey") == probe)
         n_kept = len(pruned.inputFiles())
         # the two point-probe counts are independent read-only jobs over
-        # version-pinned frames — one pool overlaps their fixed latencies
-        with _TPE(max_workers=2) as _pp:
-            _f_pruned = _pp.submit(pruned.count)
-            _f_full = _pp.submit(full.count)
-            n_pruned, n_full = _f_pruned.result(), _f_full.result()
+        # version-pinned frames — overlap their fixed latencies
+        with overlap(pruned.count, full.count) as legs:
+            n_pruned, n_full = (f.result() for f in legs)
         hidden_prune_ok = (
             0 < n_kept < len(all_files)
             and n_pruned == n_full > 0
@@ -1605,30 +1540,25 @@ def q120_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             and snapshot_versions(table)[-1] == v_chk
             and snapshot_rows(table) == n_orders_total
         )
-        # STORAGE-PARTITIONED JOIN (round 10): a second snapshot table
-        # bucket-partitioned by the SAME transform (bucket(16, custkey))
-        # joins this one with ZERO shuffle exchange in the join subtree —
-        # per-bucket co-located scans, broadcast bucket-locally, unioned
-        # (ops/bucketing.snapshot_colocated_join; plan additionally pinned
-        # by tests/test_plans.py). The boolean pins plan shape AND row
-        # parity against the naive join. The cust table's write was
-        # submitted up top (independent of the CHECK leg) — join it here.
-        from ..ops.bucketing import snapshot_colocated_join
+    # STORAGE-PARTITIONED JOIN (round 10): a second snapshot table
+    # bucket-partitioned by the SAME transform (bucket(16, custkey))
+    # joins this one with ZERO shuffle exchange in the join subtree —
+    # per-bucket co-located scans, broadcast bucket-locally, unioned
+    # (ops/bucketing.snapshot_colocated_join; plan additionally pinned
+    # by tests/test_plans.py). The boolean pins plan shape AND row
+    # parity against the naive join. The cust table's write was started
+    # up top (independent of the CHECK leg) and joined by the block exit.
+    from ..ops.bucketing import snapshot_colocated_join
 
-        fut_cust.result()
-    finally:
-        pool.shutdown(wait=True)
     spj = snapshot_colocated_join(
         spark, table, cust_tbl, "o_custkey", "c_custkey"
     )
     spj_plan = spj._jdf.queryExecution().executedPlan().toString()
-    # plan-parity counts: two independent read-only jobs, one pool
-    with _TPE(max_workers=2) as _sp:
-        _f_spj = _sp.submit(spj.count)
-        _f_naive = _sp.submit(
-            cur.join(cust, cur.o_custkey == cust.c_custkey).count
-        )
-        n_spj, n_naive = _f_spj.result(), _f_naive.result()
+    # plan-parity counts: two independent read-only jobs, overlapped
+    with overlap(
+        spj.count, cur.join(cust, cur.o_custkey == cust.c_custkey).count
+    ) as legs:
+        n_spj, n_naive = (f.result() for f in legs)
     spj_ok = (
         "Exchange hashpartitioning" not in spj_plan
         and n_spj == n_naive
@@ -1654,10 +1584,8 @@ def q120_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     full2 = snapshot_read(spark, table).where(F.col("o_custkey") == probe)
     all2, _ = _plan_files(table, None, None)
     # same shape as the first probe pair: overlap the two counts
-    with _TPE(max_workers=2) as _pp2:
-        _f_pruned2 = _pp2.submit(pruned2.count)
-        _f_full2 = _pp2.submit(full2.count)
-        n_pruned2, n_full2 = _f_pruned2.result(), _f_full2.result()
+    with overlap(pruned2.count, full2.count) as legs:
+        n_pruned2, n_full2 = (f.result() for f in legs)
     spec_evolution_ok = (
         v_spec == v_chk + 1
         and len(
@@ -1756,8 +1684,6 @@ FROM orders GROUP BY 1, 2
 
 
 def q119_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..ops.ivm import apply_agg_delta, finish_agg, materialize_agg
     from ..ops.mv import mv_create
     from ..ops.snapshot import snapshot_changes, snapshot_read
@@ -1769,143 +1695,120 @@ def q119_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v1 — run them CONCURRENTLY with the chain's merge builds instead
     # of serially after them (they read version=1, immutable under the
     # concurrent commits)
-    _pt = _ProfT("q119")
     st_ch = _small_chain_start(spark, sf_dir)
     mv = os.path.join(_tracked_mkdtemp(prefix="e02_mvtbl_"), "mv")
     mv2 = os.path.join(_tracked_mkdtemp(prefix="e02_mvstream_"), "mv")
-    with ThreadPoolExecutor(max_workers=3) as pre:
-        fut_state = pre.submit(
-            lambda: materialize_agg(
-                snapshot_read(spark, st_ch["table"], version=1),
-                keys, sums, minmax=minmax,
-            ).localCheckpoint()
-        )
-        fut_mv = pre.submit(
-            lambda: mv_create(spark, st_ch["table"], mv, keys, sums,
-                              minmax=minmax, version=1)
-        )
-        fut_mv2 = pre.submit(
-            lambda: mv_create(spark, st_ch["table"], mv2, keys, sums,
-                              minmax=minmax, version=1)
-        )
+    with overlap(
+        lambda: materialize_agg(
+            snapshot_read(spark, st_ch["table"], version=1),
+            keys, sums, minmax=minmax,
+        ).localCheckpoint(),
+        partial(mv_create, spark, st_ch["table"], mv, keys, sums,
+                minmax=minmax, version=1),
+        partial(mv_create, spark, st_ch["table"], mv2, keys, sums,
+                minmax=minmax, version=1),
+    ) as (fut_state, _, _):
         ch = st_ch["future"].result()
-        state = fut_state.result()
-        fut_mv.result()
-        fut_mv2.result()
-    _pt.mark("prep+chain")
+    state = fut_state.result()
     # The two persisted-MV maintenance DRAINS depend only on the FINAL
     # chain (committed above) and their own tables — kick them off now
     # so their fixed machinery (one exactly-once refresh; the CDF
     # stream's Python-runner spawn + micro-batch fold) overlaps the
     # delta computation below instead of following it serially (guide
     # §2.6). Their maintained-state DIFFS still run in the verification
-    # pool — those do depend on `maintained`.
+    # legs — those do depend on `maintained`. The block joins both
+    # drains even on failure (their errors must surface, and no
+    # in-flight refresh/stream may outlive the entry).
     from ..ops.mv import mv_refresh, mv_stream
 
-    drains = ThreadPoolExecutor(max_workers=2)
+    maintained = None
     try:
-        fut_refresh = drains.submit(mv_refresh, spark, ch["table"], mv)
-        fut_drain = drains.submit(
+        with overlap(
+            partial(mv_refresh, spark, ch["table"], mv),
             lambda: _await(mv_stream(
                 spark, ch["table"], mv2,
                 _tracked_mkdtemp(prefix="e02_mvstreamck_"),
-            ))
-        )
-        delta = snapshot_changes(spark, ch["table"], ch["v1"], ch["v3"])
-        # the chain's delete merge RETRACTS rows, so the maintained
-        # MIN/MAX exercise recompute-on-retract: only dirty groups
-        # re-scan the base
-        v3 = snapshot_read(spark, ch["table"], version=ch["v3"])
-        maintained = apply_agg_delta(
-            state, delta, keys, sums, minmax=minmax, base=v3
-        ).persist()
-        _pt.mark("apply_delta")
-        # three independent verification legs run CONCURRENTLY
-        # (independent tables/jobs; Spark schedules them in one session
-        # — sequential order would pay sum-of-walls for fixed
-        # streaming/refresh machinery plus the recompute job):
-        #   * RECOMPUTE: symmetric-difference emptiness of the
-        #     maintained state vs a full v3 recompute, in ONE job.
-        #   * BATCH (ops/mv.mv_refresh): state in its own snapshot
-        #     table, cursor riding the commit, one exactly-once refresh
-        #     rolls v1 -> v3 (drained above, overlapped with the delta);
-        #     a second refresh is a cursor no-op.
-        #   * CONTINUOUS (round 10, ops/mv.mv_stream): the chain's CDF
-        #     STREAM feeds a foreachBatch fold committing state+cursor
-        #     exactly-once per micro-batch (the DLT shape; drained
-        #     above, overlapped with the delta).
-        # Both stored states must equal the in-memory maintained state
-        # bit-for-bit.
-        from concurrent.futures import ThreadPoolExecutor
+            )),
+        ) as (fut_refresh, fut_drain):
+            delta = snapshot_changes(spark, ch["table"], ch["v1"], ch["v3"])
+            # the chain's delete merge RETRACTS rows, so the maintained
+            # MIN/MAX exercise recompute-on-retract: only dirty groups
+            # re-scan the base
+            v3 = snapshot_read(spark, ch["table"], version=ch["v3"])
+            maintained = apply_agg_delta(
+                state, delta, keys, sums, minmax=minmax, base=v3
+            ).persist()
+            # three independent verification legs run CONCURRENTLY
+            # (independent tables/jobs; Spark schedules them in one
+            # session — sequential order would pay sum-of-walls for fixed
+            # streaming/refresh machinery plus the recompute job):
+            #   * RECOMPUTE: symmetric-difference emptiness of the
+            #     maintained state vs a full v3 recompute, in ONE job.
+            #   * BATCH (ops/mv.mv_refresh): state in its own snapshot
+            #     table, cursor riding the commit, one exactly-once
+            #     refresh rolls v1 -> v3 (drained above, overlapped with
+            #     the delta); a second refresh is a cursor no-op.
+            #   * CONTINUOUS (round 10, ops/mv.mv_stream): the chain's CDF
+            #     STREAM feeds a foreachBatch fold committing
+            #     state+cursor exactly-once per micro-batch (the DLT
+            #     shape; drained above, overlapped with the delta).
+            # Both stored states must equal the in-memory maintained
+            # state bit-for-bit.
 
-        from ..ops.snapshot import snapshot_read as _sread
+            def _diff_empty(df) -> bool:
+                return (
+                    df.exceptAll(maintained)
+                    .unionByName(maintained.exceptAll(df))
+                    .limit(1)
+                    .count()
+                    == 0
+                )
 
-        def _diff_empty(df) -> bool:
-            return (
-                df.exceptAll(maintained)
-                .unionByName(maintained.exceptAll(df))
-                .limit(1)
-                .count()
-                == 0
-            )
+            def _recompute_leg() -> bool:
+                return _diff_empty(
+                    materialize_agg(v3, keys, sums, minmax=minmax)
+                )
 
-        def _recompute_leg() -> bool:
-            return _diff_empty(materialize_agg(v3, keys, sums, minmax=minmax))
+            def _batch_leg() -> bool:
+                # mv was created at v1 in the prefetch block and refreshed
+                # by the overlapped drain above — join it, then verify
+                r1 = fut_refresh.result()
+                return (
+                    r1["refreshed_to"] == ch["v3"]
+                    and _diff_empty(snapshot_read(spark, mv))
+                    and mv_refresh(spark, ch["table"], mv)["noop"] is True
+                )
 
-        def _batch_leg() -> bool:
-            # mv was created at v1 in the prefetch block and refreshed
-            # by the overlapped drain above — join it, then verify
-            r1 = fut_refresh.result()
-            return (
-                r1["refreshed_to"] == ch["v3"]
-                and _diff_empty(_sread(spark, mv))
-                and mv_refresh(spark, ch["table"], mv)["noop"] is True
-            )
+            def _stream_leg() -> bool:
+                # mv2 was created at v1 in the prefetch block and drained
+                # by the overlapped CDF stream above — join it, then verify
+                fut_drain.result()
+                return _diff_empty(snapshot_read(spark, mv2))
 
-        def _stream_leg() -> bool:
-            # mv2 was created at v1 in the prefetch block and drained by
-            # the overlapped CDF stream above — join it, then verify
-            fut_drain.result()
-            return _diff_empty(_sread(spark, mv2))
+            def _finish_leg():
+                # the result projection depends only on `maintained` — run
+                # its job CONCURRENTLY with the verification legs instead
+                # of serially after them (the legs' booleans ride in as
+                # plain literals afterwards)
+                return finish_agg(
+                    maintained, keys, sums, count_alias="n_orders",
+                    minmax=minmax,
+                ).localCheckpoint()
 
-        def _finish_leg():
-            # the result projection depends only on `maintained` — run
-            # its job CONCURRENTLY with the verification legs instead of
-            # serially after them (the legs' booleans ride in as plain
-            # literals afterwards)
-            return finish_agg(
-                maintained, keys, sums, count_alias="n_orders",
-                minmax=minmax,
-            ).localCheckpoint()
-
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            fut_out = ex.submit(_finish_leg)
-            fut_m = ex.submit(_recompute_leg)
-            fut_b = ex.submit(_batch_leg)
-            fut_s = ex.submit(_stream_leg)
-            out = fut_out.result()
-            matches = fut_m.result()
-            persisted_mv_matches = fut_b.result()
-            streamed_mv_matches = fut_s.result()
-        _pt.mark("four_legs")
-        _pt.dump()
-        return (
-            out.withColumn("ivm_matches_recompute", F.lit(bool(matches)))
-            .withColumn(
-                "persisted_mv_matches", F.lit(bool(persisted_mv_matches))
-            )
-            .withColumn(
-                "streamed_mv_matches", F.lit(bool(streamed_mv_matches))
-            )
-        )
+            with overlap(
+                _finish_leg, _recompute_leg, _batch_leg, _stream_leg
+            ) as legs:
+                out, matches, persisted_mv_matches, streamed_mv_matches = (
+                    f.result() for f in legs
+                )
     finally:
-        # join both drains even on failure (their errors must surface,
-        # and no in-flight refresh/stream may outlive the entry)
-        drains.shutdown(wait=True)
-        try:
+        if maintained is not None:
             maintained.unpersist()
-        except NameError:
-            pass  # failed before apply_agg_delta assigned it
+    return (
+        out.withColumn("ivm_matches_recompute", F.lit(bool(matches)))
+        .withColumn("persisted_mv_matches", F.lit(bool(persisted_mv_matches)))
+        .withColumn("streamed_mv_matches", F.lit(bool(streamed_mv_matches)))
+    )
 
 
 _Q119_SQL = f"""
@@ -2002,8 +1905,6 @@ def _mor_chain_build(spark: SparkSession, sf_dir: str, key) -> dict:
     # CONCURRENTLY with the rewrite-deletes fold (which only commits a
     # NEWER version) — the same overlap the EQ chain (q123) pins; the
     # binpack below stays serial (it packs the rewrite's output layout).
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..ops.snapshot import snapshot_changes
 
     def _cdf_leg() -> dict:
@@ -2017,13 +1918,11 @@ def _mor_chain_build(spark: SparkSession, sf_dir: str, key) -> dict:
             .collect()
         }
 
-    with ThreadPoolExecutor(max_workers=2) as _ex:
-        _fut_cdf = _ex.submit(_cdf_leg)
-        _fut_rw = _ex.submit(
-            snapshot_rewrite_deletes, spark, table, n_files_new=2
-        )
-        cdf = _fut_cdf.result()
-        rw = _fut_rw.result()
+    with overlap(
+        _cdf_leg,
+        partial(snapshot_rewrite_deletes, spark, table, n_files_new=2),
+    ) as legs:
+        cdf, rw = (f.result() for f in legs)
     # maintenance pass: binpack coalesces m2's two small appended files
     # (the chain's simulated ingest sprawl) and leaves the bulk alone;
     # the table's content hash downstream pins that it changed nothing
@@ -2133,10 +2032,6 @@ def q122_cdf_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..sources.snapshot_cdf_stream import read_snapshot_changes_stream
 
-    # this part runs on a private CLONE_SESSION: its state folds and
-    # micro-batches are tiny, so a narrow shuffle beats the default
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    _pt = _ProfT("q122")
     orders = load_table(spark, sf_dir, "orders")
     # an EIGHTH of orders (round 13, down from the quarter): every pin
     # here — IVM-vs-recompute equality, maintenance silence, exact feed
@@ -2162,17 +2057,14 @@ def q122_cdf_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(0)
         ).alias("n_upd"),
     ).first()
-    _pt.mark("src_agg")
     mid = st["mx"] // 2
     snapshot_write(
         sl.where(F.col("o_orderkey") <= mid), tbl, mode="overwrite",
         n_files=2, cluster_by=["o_orderkey"], stats_cols=["o_orderkey"],
     )
-    _pt.mark("base_write")
     state = materialize_agg(
         snapshot_read(spark, tbl).limit(0), keys, sums
     ).localCheckpoint()
-    _pt.mark("state_init")
 
     # ONE live query observes both phases: micro-batches are parked
     # (localCheckpoint pins each batch's content past its micro-batch
@@ -2215,9 +2107,7 @@ def q122_cdf_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         return sum(counts)
 
     rows_lo = snapshot_rows(tbl)
-    _pt.mark("stream_start")
     n1 = wait_rows(rows_lo)  # phase 1: the initial load as inserts
-    _pt.mark("phase1_drain")
     snapshot_write(
         sl.where(F.col("o_orderkey") > mid), tbl, mode="append", n_files=1
     )
@@ -2238,9 +2128,7 @@ def q122_cdf_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
                    strategy="mor")
     # content-preserving maintenance ALSO flows through the open stream —
     # its data_change=false steps must contribute exactly zero feed rows
-    _pt.mark("mutations")
     snapshot_rewrite_deletes(spark, tbl, n_files_new=2)
-    _pt.mark("rewrite")
     # the silence pin needs the stream CONSUMED THROUGH the final
     # version before we stop — row-count waits alone would stop early
     # and miss rows a broken maintenance step emitted at the tail
@@ -2263,10 +2151,8 @@ def q122_cdf_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise TimeoutError(f"CDF stream never reached v{final_v}")
         time.sleep(0.05)
     n2 = sum(counts) - n1
-    _pt.mark("final_drain")
     q.stop()
     q.awaitTermination(60)
-    _pt.mark("stop")
     # count/sum deltas are purely additive, so ONE fold over the union
     # of every micro-batch equals folding them in sequence — one join
     # against the state instead of one per batch
@@ -2287,8 +2173,6 @@ def q122_cdf_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         n1 == rows_lo
         and n2 == (st["n"] - rows_lo) + st["n_del"] + 2 * st["n_upd"]
     )
-    from concurrent.futures import ThreadPoolExecutor
-
     def _matches_leg() -> bool:
         recompute = materialize_agg(snapshot_read(spark, tbl), keys, sums)
         return (
@@ -2304,13 +2188,8 @@ def q122_cdf_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             state, keys, sums, count_alias="n_orders"
         ).localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        fut_out = ex.submit(_out_leg)
-        fut_m = ex.submit(_matches_leg)
-        out = fut_out.result()
-        matches = fut_m.result()
-    _pt.mark("fold+verify")
-    _pt.dump()
+    with overlap(_out_leg, _matches_leg) as legs:
+        out, matches = (f.result() for f in legs)
     return (
         out.withColumn("ivm_matches_recompute", F.lit(bool(matches)))
         .withColumn("maintenance_silent", F.lit(bool(maintenance_silent)))
@@ -2455,8 +2334,6 @@ def q123_eq_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CONCURRENTLY with the rewrite-deletes fold (which only commits a
     # NEWER version) — two independent job chains instead of a serial
     # tail
-    from concurrent.futures import ThreadPoolExecutor
-
     def _cdf_leg() -> dict:
         return {
             r["_change_type"]: r["n"]
@@ -2466,13 +2343,11 @@ def q123_eq_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         }
 
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        fut_cdf = ex.submit(_cdf_leg)
-        fut_rw = ex.submit(
-            snapshot_rewrite_deletes, spark, table, n_files_new=2
-        )
-        cdf = fut_cdf.result()
-        rw = fut_rw.result()
+    with overlap(
+        _cdf_leg,
+        partial(snapshot_rewrite_deletes, spark, table, n_files_new=2),
+    ) as legs:
+        cdf, rw = (f.result() for f in legs)
     cdf_eq_ok = (
         cdf.get("delete", 0) == n_upd
         and cdf.get("insert", 0) == n_upd + n_ins
@@ -2545,9 +2420,7 @@ def q124_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_versions,
     )
 
-    _pt = _ProfT("q124")
     ch = _small_chain(spark, sf_dir)
-    _pt.mark("chain_wait")
     base = _tracked_mkdtemp(prefix="e02_repl_")
     mirror = os.path.join(base, "mirror")
     ck = os.path.join(base, "ck")
@@ -2555,7 +2428,6 @@ def q124_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, ch["table"], mirror, on=["o_orderkey"], checkpoint_dir=ck,
     )
     q.awaitTermination(300)
-    _pt.mark("replicate_stream")
     # incremental/exactly-once bookkeeping, from the checkpoint itself:
     # the offset log must be fully caught up to the source's last
     # version and every planned batch committed — the state from which
@@ -2587,8 +2459,6 @@ def q124_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold the CDC legs' eq-delete files, then the metadata COUNT is
     # derivable again and must equal the source chain's
     snapshot_rewrite_deletes(spark, mirror, n_files_new=2)
-    _pt.mark("rewrite+meta")
-    _pt.dump()
     rows_ok = snapshot_rows(mirror) == snapshot_rows(ch["table"])
     return (
         snapshot_read(spark, mirror)

@@ -14,6 +14,7 @@ Defaults chosen for correctness-determinism and scale-readiness:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -82,82 +83,22 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
-import threading
-from contextlib import contextmanager
-
-_SCOPE_LOCK = threading.Lock()
-_SCOPE_STATE: dict[int, dict] = {}
-
-
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Scope spark.sql.shuffle.partitions to `n`, restoring on exit.
+    """Scope spark.sql.shuffle.partitions to `n`, restoring the previous
+    value on exit (the body raising included); scopes nest.
 
     Shared by the streaming entries (state-store count per stateful
     operator) and the iterative small-graph pipelines (per-round exchange
     width) — both size the shuffle to the DATA, not the session default.
 
-    THREAD-SAFE and refcounted: the streaming composites start several
-    same-width jobs concurrently from worker threads, and the session
-    conf is global — so the outer value is saved exactly once (first
-    scope in) and restored exactly once (last scope out), never the
-    torn save/restore interleaving a naive per-scope save would produce
-    (which can permanently leak the scoped value into the session).
-
-    Width rules (round 8 — the nesting the old save/restore supported is
-    back, without losing the cross-thread safety):
-    - concurrent scopes of the SAME width merge (refcounted frame);
-    - the SAME thread may NEST a different width (LIFO frames: the inner
-      scope sets its width and exit restores the enclosing frame's);
-    - a different width while ANOTHER thread holds any active frame
-      raises: the conf is captured by each streaming query at .start(),
-      so two widths genuinely cannot coexist across threads."""
+    A plain save/set/restore: the conf is per session, and concurrent
+    composite parts each run on their own cloned session
+    (composites._make_query), so no two threads scope one session."""
     key = "spark.sql.shuffle.partitions"
-    sid = id(spark)
-    tid = threading.get_ident()
-    n = int(n)
-    with _SCOPE_LOCK:
-        st = _SCOPE_STATE.get(sid)
-        if st is None:
-            st = {"outer": spark.conf.get(key), "frames": []}
-            _SCOPE_STATE[sid] = st
-            spark.conf.set(key, str(n))
-            frame = {"n": n, "count": 1, "tids": {tid}}
-            st["frames"].append(frame)
-        elif st["frames"][-1]["n"] == n:
-            frame = st["frames"][-1]
-            frame["count"] += 1
-            frame["tids"].add(tid)
-        elif all(f["tids"] == {tid} for f in st["frames"]):
-            spark.conf.set(key, str(n))  # same-thread nested scope
-            frame = {"n": n, "count": 1, "tids": {tid}}
-            st["frames"].append(frame)
-        else:
-            raise RuntimeError(
-                "scoped_shuffle_partitions conflict: active scope has "
-                f"width {st['frames'][-1]['n']}, requested {n} — "
-                "differing widths are only allowed as same-thread nested "
-                "scopes; concurrent scopes across threads must agree"
-            )
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(int(n)))
     try:
         yield
     finally:
-        # decrement the EXACT frame this scope joined (never blindly the
-        # top: a different-thread scope may have merged into a frame that
-        # is no longer top by exit time, and decrementing the top would
-        # tear down an inner frame another thread still holds). A non-top
-        # frame reaching zero stays in place — its width is shadowed by
-        # the active inner frame — and is popped when the frames above it
-        # unwind; conf is only restored when the top actually pops.
-        with _SCOPE_LOCK:
-            frame["count"] -= 1
-            popped = False
-            while st["frames"] and st["frames"][-1]["count"] == 0:
-                st["frames"].pop()
-                popped = True
-            if popped:
-                if st["frames"]:
-                    spark.conf.set(key, str(st["frames"][-1]["n"]))
-                else:
-                    spark.conf.set(key, st["outer"])
-                    del _SCOPE_STATE[sid]
+        spark.conf.set(key, before)

@@ -621,18 +621,10 @@ def incremental_corpus_dedup(
         )
 
     def _batch(batch: DataFrame, batch_id: int) -> None:
-        import time as _t
-
-        _prof = os.environ.get("E02_PROF") == "1"
-        _marks: list[tuple[str, float]] = [("start", _t.perf_counter())]
-
-        def _mark(name: str) -> None:
-            if _prof:
-                _marks.append((name, _t.perf_counter()))
+        from e02_spark.overlap import overlap
 
         spark = batch.sparkSession
         sizes_old = _read_sizes_state(spark, batch_id)
-        _mark("sizes_state_read")
         # Ingest-order watermark = max doc_id already in the doc_sizes
         # state (no separate watermark table — one tiny agg over the
         # per-doc state, not a per-batch single-row write, which profiled
@@ -642,9 +634,9 @@ def incremental_corpus_dedup(
         #
         # The bounds agg and the (first-batch) watermark lookup are
         # independent of the candidate build below, so their fixed job
-        # latencies run on a WORKER THREAD and overlap the candidate
+        # latencies run as an overlap leg beside the candidate
         # materialization instead of preceding it serially. The contract
-        # check happens at the join point — still strictly before any
+        # check happens after the join — still strictly before any
         # state write, which is all the ordering the replay/abort
         # semantics need (an aborted batch must write nothing).
         def _bounds_and_wm():
@@ -663,82 +655,76 @@ def incremental_corpus_dedup(
                     prev_max = sizes_old.agg(F.max("doc_id")).first()[0]
             return bounds, prev_max
 
-        from concurrent.futures import ThreadPoolExecutor
+        with overlap(_bounds_and_wm) as (bw_fut,):
+            # persisted (not eagerly checkpointed — the eager job was pure
+            # scheduling overhead; lineage never leaves this batch closure):
+            # computed once on first use, reused by sizes_new, keys_new, the
+            # exact-verify corpus, and the state write
+            sh_new = shingles(batch).persist()
+            # persisted: feeds both the Jaccard denominators and its own
+            # doc_sizes state write
+            sizes_new = sh_new.groupBy("doc_id").agg(
+                F.count(F.lit(1)).alias("n_sh")
+            ).persist()
+            # keys_new feeds both sides of the probe join and the state
+            # append; persist so the k-digest signature runs once per batch
+            keys_new = band_keys(minhash_signature(sh_new, k=k), k, bands).persist()
+            # bucket-pruned index read: only the buckets this batch's keys
+            # hash into can hold colliding old keys (lossless — equal
+            # band_key => equal bucket)
+            bucket_filter = None
+            if index_buckets > 0:
+                touched = [
+                    r[0]
+                    for r in keys_new.select(
+                        F.pmod(
+                            F.xxhash64("band_key"), F.lit(index_buckets)
+                        ).alias("b")
+                    )
+                    .distinct()
+                    .collect()
+                ]
+                bucket_filter = F.col("bucket").isin(touched)
+            idx_old = _read_state(
+                spark, index_dir, "doc_id BIGINT, band_idx INT, band_key STRING",
+                batch_id,
+                extra=bucket_filter,
+            )
+            sh_old = _read_state(
+                spark, shingle_dir, "doc_id BIGINT, shingle STRING", batch_id
+            )
 
-        _bw_pool = ThreadPoolExecutor(max_workers=1)
-        bw_fut = _bw_pool.submit(_bounds_and_wm)
-        _bw_pool.shutdown(wait=False)
-        # persisted (not eagerly checkpointed — the eager job was pure
-        # scheduling overhead; lineage never leaves this batch closure):
-        # computed once on first use, reused by sizes_new, keys_new, the
-        # exact-verify corpus, and the state write
-        sh_new = shingles(batch).persist()
-        # persisted: feeds both the Jaccard denominators and its own
-        # doc_sizes state write
-        sizes_new = sh_new.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n_sh")
-        ).persist()
-        # keys_new feeds both sides of the probe join and the state
-        # append; persist so the k-digest signature runs once per batch
-        keys_new = band_keys(minhash_signature(sh_new, k=k), k, bands).persist()
-        # bucket-pruned index read: only the buckets this batch's keys
-        # hash into can hold colliding old keys (lossless — equal
-        # band_key => equal bucket)
-        bucket_filter = None
-        if index_buckets > 0:
-            touched = [
-                r[0]
-                for r in keys_new.select(
-                    F.pmod(
-                        F.xxhash64("band_key"), F.lit(index_buckets)
-                    ).alias("b")
-                )
+            # BROADCAST the batch-sized probe against the corpus-sized state
+            # index: the big side is then scanned map-side with NO exchange —
+            # per-batch shuffle volume stays O(batch + collisions) even though
+            # the state read is O(corpus) IO. (A real deployment additionally
+            # turns the index scan into a point lookup via a key-value store
+            # or band_key-bucketed table; the dataflow is identical.)
+            probe = keys_new.select(
+                F.col("doc_id").alias("db"), "band_idx", "band_key"
+            )
+            earlier = (
+                idx_old.unionByName(keys_new)
+                .select(F.col("doc_id").alias("da"), "band_idx", "band_key")
+            )
+            cand = (
+                earlier.join(F.broadcast(probe), ["band_idx", "band_key"])
+                .where(F.col("da") < F.col("db"))
+                .select("da", "db")
                 .distinct()
-                .collect()
-            ]
-            bucket_filter = F.col("bucket").isin(touched)
-        idx_old = _read_state(
-            spark, index_dir, "doc_id BIGINT, band_idx INT, band_key STRING",
-            batch_id,
-            extra=bucket_filter,
-        )
-        sh_old = _read_state(
-            spark, shingle_dir, "doc_id BIGINT, shingle STRING", batch_id
-        )
-
-        # BROADCAST the batch-sized probe against the corpus-sized state
-        # index: the big side is then scanned map-side with NO exchange —
-        # per-batch shuffle volume stays O(batch + collisions) even though
-        # the state read is O(corpus) IO. (A real deployment additionally
-        # turns the index scan into a point lookup via a key-value store
-        # or band_key-bucketed table; the dataflow is identical.)
-        probe = keys_new.select(
-            F.col("doc_id").alias("db"), "band_idx", "band_key"
-        )
-        earlier = (
-            idx_old.unionByName(keys_new)
-            .select(F.col("doc_id").alias("da"), "band_idx", "band_key")
-        )
-        cand = (
-            earlier.join(F.broadcast(probe), ["band_idx", "band_key"])
-            .where(F.col("da") < F.col("db"))
-            .select("da", "db")
-            .distinct()
-            .persist()
-        )
-        # The collision side is UNBOUNDED (a hot batch can collide with
-        # the whole corpus), so unlike the batch-bounded probe it is only
-        # broadcast while it is verifiably small — the count is free-ish
-        # (it materializes the persisted cand, which every later stage
-        # reuses); past the limit the joins fall back to shuffles, which
-        # is the right plan at that size.
-        n_cand = cand.count()
-        _mark("cand_count")
-        # join point for the overlapped bounds/watermark job: enforce the
+                .persist()
+            )
+            # The collision side is UNBOUNDED (a hot batch can collide with
+            # the whole corpus), so unlike the batch-bounded probe it is only
+            # broadcast while it is verifiably small — the count is free-ish
+            # (it materializes the persisted cand, which every later stage
+            # reuses); past the limit the joins fall back to shuffles, which
+            # is the right plan at that size.
+            n_cand = cand.count()
+        # the overlapped bounds/watermark job is joined: enforce the
         # ingest-order contract (and the empty-batch no-op) BEFORE any
         # state write, exactly as the serial form did
         bounds, prev_max = bw_fut.result()
-        _mark("bounds_join")
         lo = bounds["lo"]
         if lo is None:
             # empty micro-batch: nothing to probe, no state to write
@@ -825,14 +811,12 @@ def incremental_corpus_dedup(
                 ).parquet(_bdir(index_dir))
 
         # The four per-batch outputs (verdicts + 3 state tables) are
-        # independent jobs over already-persisted inputs — submit them
-        # from worker threads so their fixed job-scheduling latencies
+        # independent jobs over already-persisted inputs — run them as
+        # overlap legs so their fixed job-scheduling latencies
         # overlap instead of summing (Spark's scheduler interleaves
         # concurrent jobs; per-batch replay safety is unchanged — each
         # lands in its own batch=<id> dir with mode=overwrite, and state
         # READS filter batch < batch_id regardless of write order).
-        from concurrent.futures import ThreadPoolExecutor
-
         def _write_sizes() -> None:
             # exactly-once by manifest idempotency key: a replayed
             # batch's append commits nothing twice, structurally
@@ -847,7 +831,7 @@ def incremental_corpus_dedup(
                 idempotency_key=f"batch-{batch_id}",
             )
 
-        writes = [
+        with overlap(
             # verdicts are O(surviving pairs) — one task/file instead of
             # shuffle-width files of a handful of rows each (the map side
             # keeps its parallelism; coalesce only narrows the tail stage)
@@ -859,11 +843,8 @@ def incremental_corpus_dedup(
             .write.mode("overwrite")
             .parquet(_bdir(shingle_dir)),
             _write_sizes,
-        ]
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            for f in [pool.submit(w) for w in writes]:
-                f.result()  # re-raise the first failure
-        _mark("writes")
+        ):
+            pass
         keys_new.unpersist()
         sizes_new.unpersist()
         sizes.unpersist()
@@ -871,14 +852,6 @@ def incremental_corpus_dedup(
         cand.unpersist()
         corpus.unpersist()
         _wm["max"] = int(bounds["hi"])
-        if _prof:
-            import sys as _sys
-            prev = _marks[0][1]
-            out = []
-            for n, t in _marks[1:]:
-                out.append(f"{n}={t-prev:.2f}")
-                prev = t
-            print(f"PROF batch {batch_id}: " + " ".join(out), file=_sys.stderr)
 
     writer = docs_stream.writeStream.foreachBatch(_batch).trigger(
         availableNow=True

@@ -1,6 +1,6 @@
 """Ad-hoc: run one declared entry with a job-census listener.
 
-Usage: E02_PROF=1 python scripts/profile_entry.py q116_lakehouse_merge [runs]
+Usage: python scripts/profile_entry.py q116_lakehouse_merge [runs]
 
 Prints per-run wall plus a Spark job census (job id, duration, stage/task
 counts, description) so fixed per-job machinery can be attributed to

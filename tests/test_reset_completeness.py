@@ -42,8 +42,8 @@ _QUERY_MODULES = [
 # reset_shared_state or the test fails.
 ALLOWED_WARM = {
     # -- static registries, built once at import time, never grow per run
-    "QUERIES", "ORACLE", "SPEC", "PARALLEL_GROUPS", "CLONE_SESSION",
-    "CLONE_SHUFFLE", "_ALL_Q", "_ALL_O", "MERGED",
+    "QUERIES", "ORACLE", "SPEC", "PARALLEL_GROUPS", "CLONE_SHUFFLE",
+    "_ALL_Q", "_ALL_O", "MERGED",
     "STOPWORDS", "_EVENT_TYPES", "_Q111_PATTERNS", "_PROF_NUM",
     "_PROF_STR",
     # -- module-init temporaries of the composites consistency checks
